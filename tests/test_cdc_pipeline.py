@@ -641,6 +641,105 @@ def test_feed_meta_records_and_validates_bucket_count(spark, tmp_path):
     assert read_feed_meta(spark, compacted) == 32
 
 
+def _feed_table(spark, tmp_path, name, **kwargs) -> str:
+    """A feed table written by run_cdc_pipeline over the fixture lines."""
+    src = tmp_path / f"{name}_in"
+    src.mkdir()
+    (src / "b.jsonl").write_text("\n".join(fixture_lines()) + "\n")
+    feed = str(tmp_path / name)
+    run_cdc_pipeline(
+        spark, str(src), feed, str(tmp_path / f"{name}_ck"), **kwargs
+    ).awaitTermination()
+    return feed
+
+
+def test_user_bucket_of_matches_user_bucket_expr(spark):
+    """The driver-side bucket equals the bucket the sink writes
+    (user_bucket_expr) for ASCII, empty, negative-looking and non-ASCII
+    ids, under two moduli."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import (
+        user_bucket_expr,
+        user_bucket_of,
+    )
+
+    ids = ["2", "user_123", "", " ", "-1", "-9223372036854775808",
+           "ünïcødé", "日本語", "😀", "a\u0000b"]
+    frame = spark.createDataFrame([(u,) for u in ids], "u string")
+    for n in (32, 7):
+        rows = frame.select(user_bucket_expr(F.col("u"), n).alias("b")).collect()
+        assert [user_bucket_of(spark, u, n) for u in ids] == [r.b for r in rows], n
+
+
+def test_feed_table_schema_matches_inferred(spark, tmp_path):
+    """FEED_TABLE_SCHEMA is what Spark infers from a table written by
+    both run_cdc_pipeline arms and by compact_feed (name and type): the
+    drift guard for reads that skip inference."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import (
+        FEED_TABLE_SCHEMA,
+        compact_feed,
+    )
+
+    single = _feed_table(spark, tmp_path, "single")
+    dual = _feed_table(
+        spark, tmp_path, "dual", dead_letter_path=str(tmp_path / "dead")
+    )
+    compacted = str(tmp_path / "compacted")
+    compact_feed(spark, single, compacted)
+    want = {f.name: f.dataType for f in FEED_TABLE_SCHEMA.fields}
+    for path in (single, dual, compacted):
+        inferred = spark.read.parquet(path).schema
+        assert {f.name: f.dataType for f in inferred.fields} == want, path
+
+
+def test_read_user_feed_empty_bucket_is_empty_page(spark, tmp_path):
+    """A user whose bucket has no directory gets an empty page with the
+    table's columns, at any offset — not PATH_NOT_FOUND."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import (
+        FEED_TABLE_SCHEMA,
+        user_bucket_of,
+    )
+
+    feed = _feed_table(spark, tmp_path, "feed")
+    present = {
+        int(d.name.split("=", 1)[1])
+        for d in (tmp_path / "feed").glob("activity_date=*/user_bucket=*")
+    }
+    absent = next(
+        u for u in (f"absent{i}" for i in range(1000))
+        if user_bucket_of(spark, u) not in present
+    )
+    for offset in (0, 5):
+        page = read_user_feed(spark, feed, absent, limit=10, offset=offset)
+        assert page.columns == FEED_TABLE_SCHEMA.names
+        assert page.collect() == []
+
+
+def test_read_user_feed_builds_without_jobs(spark, tmp_path):
+    """Building a read_user_feed DataFrame launches no Spark job (no
+    schema inference, no bucket hash job, no listing job) on either
+    layout; collecting it does."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import compact_feed
+
+    feed = _feed_table(spark, tmp_path, "feed")
+    compacted = str(tmp_path / "compacted")
+    compact_feed(spark, feed, compacted)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        for i, (path, offset) in enumerate(
+            [(feed, 0), (feed, 2), (compacted, 0), (compacted, 2)]
+        ):
+            group = f"read_user_feed_build_{i}"
+            sc.setJobGroup(group, "page build")
+            page = read_user_feed(spark, path, "2", limit=2, offset=offset)
+            assert list(tracker.getJobIdsForGroup(group)) == [], (path, offset)
+            assert len(page.collect()) == 2
+            assert list(tracker.getJobIdsForGroup(group)), "collect ran no job"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_parse_tolerates_schema_drift(spark):
     """Forward/backward compatibility of the merged-schema parse: an
     upstream producer adding unknown fields must not break or corrupt

@@ -3791,6 +3791,49 @@ def test_fan_out_estimate_matches_rdd_probe(spark, sf_dir):
     )
 
 
+def test_size_conf_units_and_malformed_fallback(spark, sf_dir, monkeypatch):
+    """_size_bytes reads every suffix Spark accepts ('1t' included), and
+    a size conf it cannot parse sends fan_out to the RDD probe instead
+    of raising."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from user_feed_cdc_spark.sources.tables import (
+        _scan_partition_estimate,
+        _size_bytes,
+        fan_out,
+    )
+
+    assert _size_bytes("1t", 0) == 1 << 40
+    assert _size_bytes("2TB", 0) == 2 << 40
+    assert _size_bytes("1p", 0) == _size_bytes("1pb", 0) == 1 << 50
+    with pytest.raises(ValueError):
+        _size_bytes("garbage", 0)
+
+    key = "spark.sql.files.maxPartitionBytes"
+    docs = load_table(spark, sf_dir, "documents")
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "1t")
+    try:
+        assert _scan_partition_estimate(docs) == docs.rdd.getNumPartitions()
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+    # Spark validates the value on conf.set, so feed the parser the
+    # malformed string through the getter
+    real_get = RuntimeConfig.get
+    monkeypatch.setattr(
+        RuntimeConfig,
+        "get",
+        lambda self, k, *a: "garbage" if k == key else real_get(self, k, *a),
+    )
+    assert _scan_partition_estimate(docs) is None
+    target = spark.sparkContext.defaultParallelism
+    assert fan_out(docs).rdd.getNumPartitions() >= target
+
+
 def test_txn_cdf_between_timestamps(spark, sf_dir):
     """Timestamp-bounded change feed (startingTimestamp/endingTimestamp
     semantics): over the CDF fixture (commit timestamps 1000..6000),

@@ -32,6 +32,12 @@ def get_spark(app_name: str = "user_feed_cdc_spark") -> SparkSession:
         # floor-probe A/B) with identical atomic-rename semantics; the
         # conf only binds the file:// scheme, so HDFS/S3 deployments
         # are untouched (their FileContext impls are unaffected).
+        # The price: ChecksumFs is also what verifies those files, so
+        # local streaming offset/commit logs and state-store files are
+        # read back with no CRC check, and a torn or bit-flipped file
+        # is not detected. That is a local-only trade-off for tests and
+        # benchmarks; a deployment that keeps checkpoints on file://
+        # should drop this line rather than inherit it unknowingly.
         .config(
             "spark.hadoop.fs.AbstractFileSystem.file.impl",
             "org.apache.hadoop.fs.local.RawLocalFs",

@@ -139,12 +139,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _size_bytes(v: str | None, default: int) -> int:
-    """Parse a Spark size conf string ('134217728', '128m', '4MB')."""
+    """Parse a Spark size conf string ('134217728', '128m', '4MB', '1t')
+    with the suffixes Spark's byteStringAs accepts. Raises ValueError on
+    a malformed value."""
     if v is None:
         return default
     s = str(v).strip().lower()
     units = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
-             "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30}
+             "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
+             "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50}
     for suf in sorted(units, key=len, reverse=True):
         if s.endswith(suf):
             return int(float(s[: -len(suf)])) * units[suf]
@@ -160,8 +163,9 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
     maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
     padded_total / defaultParallelism)), chunks bin-packed in
     size-descending order, closing a partition when it would exceed
-    maxSplitBytes. Returns None when the plan is not file-backed or a
-    size is unreadable — the caller falls back to the RDD probe.
+    maxSplitBytes. Returns None when the plan is not file-backed, a
+    size is unreadable or a size conf does not parse — the caller falls
+    back to the RDD probe.
     tests/test_operators.py pins estimate == df.rdd.getNumPartitions()
     on every fan_out input shape."""
     import re
@@ -180,6 +184,19 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
         if not nodes <= {"Project", "Filter", "Relation", "SubqueryAlias"}:
             return None
         files = df.inputFiles()
+        conf = df.sparkSession.conf
+        max_pb = _size_bytes(
+            conf.get("spark.sql.files.maxPartitionBytes", None), 128 << 20
+        )
+        open_cost = _size_bytes(
+            conf.get("spark.sql.files.openCostInBytes", None), 4 << 20
+        )
+        min_pn = conf.get("spark.sql.files.minPartitionNum", None)
+        parallelism = (
+            int(min_pn)
+            if min_pn
+            else df.sparkSession.sparkContext.defaultParallelism
+        )
     except Exception:
         return None
     if not files:
@@ -191,19 +208,6 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
             sizes.append(os.path.getsize(p))
         except OSError:
             return None
-    conf = df.sparkSession.conf
-    max_pb = _size_bytes(
-        conf.get("spark.sql.files.maxPartitionBytes", None), 128 << 20
-    )
-    open_cost = _size_bytes(
-        conf.get("spark.sql.files.openCostInBytes", None), 4 << 20
-    )
-    min_pn = conf.get("spark.sql.files.minPartitionNum", None)
-    parallelism = (
-        int(min_pn)
-        if min_pn
-        else df.sparkSession.sparkContext.defaultParallelism
-    )
     total = sum(s + open_cost for s in sizes)
     max_split = min(max_pb, max(open_cost, total // parallelism))
     chunks: list[int] = []

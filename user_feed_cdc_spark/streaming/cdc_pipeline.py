@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
-from user_feed_cdc_spark.schemas import CDC_TABLES, MERGED_CDC_SCHEMA
+from user_feed_cdc_spark.schemas import ACTIVITY_SCHEMA, CDC_TABLES, MERGED_CDC_SCHEMA
 
 # Minimal schema to route an event before full payload parsing.
 META_SCHEMA = T.StructType(
@@ -508,6 +508,41 @@ def user_bucket_expr(user_id_col, n_buckets: int = N_USER_BUCKETS) -> Column:
     return F.pmod(F.xxhash64(user_id_col), F.lit(n_buckets))
 
 
+_XXHASH64_SEED = 42  # the seed F.xxhash64 (Catalyst's XxHash64) hashes with
+
+
+def user_bucket_of(
+    spark: SparkSession, user_id: str, n_buckets: int = N_USER_BUCKETS
+) -> int:
+    """user_bucket_expr evaluated in the driver for one user id: the
+    JVM's own XXH64 over the id's UTF-8 bytes, so it equals the value
+    the sink wrote without launching a job. Python's % with a positive
+    modulus is non-negative, like pmod."""
+    jvm = spark.sparkContext._jvm
+    utf8 = jvm.org.apache.spark.unsafe.types.UTF8String.fromString(user_id)
+    h = jvm.org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
+        utf8, _XXHASH64_SEED
+    )
+    return h % n_buckets
+
+
+# Schema of the feed table in both layouts: the streaming sink's
+# (activity_date, user_bucket, _batch_id) partitions and compact_feed's
+# (activity_date, user_bucket) ones, where _batch_id is a data column.
+# Partition column types are the ones Spark infers from the directory
+# names. Reading with it skips parquet's schema-inference job;
+# test_feed_table_schema_matches_inferred guards it against drift.
+FEED_TABLE_SCHEMA = T.StructType(
+    ACTIVITY_SCHEMA.fields
+    + [
+        T.StructField("_seq", T.LongType()),
+        T.StructField("activity_date", T.DateType()),
+        T.StructField("user_bucket", T.IntegerType()),
+        T.StructField("_batch_id", T.IntegerType()),
+    ]
+)
+
+
 _FEED_META = "_feed_meta.json"  # '_' prefix: invisible to parquet file listing
 
 
@@ -715,7 +750,7 @@ def compact_feed(spark: SparkSession, feed_path: str, compacted_path: str) -> No
     rows, the parquet translation of Cassandra's clustering layout.
     Run periodically (e.g. per closed date partition); the streaming
     sink keeps writing new _batch_id partitions meanwhile."""
-    feed = spark.read.parquet(feed_path)
+    feed = spark.read.schema(FEED_TABLE_SCHEMA).parquet(feed_path)
     (
         feed.repartition(F.col("activity_date"), F.col("user_bucket"))
         .sortWithinPartitions(
@@ -747,12 +782,23 @@ def read_user_feed(
     """Per-user feed page over the materialized feed table (reference
     endpoint: main.py:136-189, limit+offset pagination main.py:137,164).
 
-    The user_bucket predicate is constant-foldable (hash of a literal),
-    so the scan partition-prunes to 1/n_buckets of the files before the
-    user_id filter even runs — the Cassandra partition-key read path
-    re-expressed. Ordering: (event_timestamp, _batch_id, _seq) DESC — the
-    explicit TIMEUUID-clustering replacement (SURVEY.md §7.3.1). OFFSET
-    is top-(offset+limit) then a row_number slice over that bounded set
+    Only the user's bucket is touched — the Cassandra partition-key read
+    path re-expressed. The bucket is computed in the driver
+    (user_bucket_of), and one FileSystem glob lists just
+    `activity_date=*/user_bucket=<b>` under feed_path, so the rest of
+    the table is never listed. Those directories are read with the
+    fixed FEED_TABLE_SCHEMA (no schema-inference job) and feed_path as
+    basePath, so building the page launches no Spark job — as long as
+    Spark lists those directories on the driver, i.e. no level holds
+    more than spark.sql.sources.parallelPartitionDiscovery.threshold
+    (32) of them (dates, or a bucket's uncompacted _batch_id
+    directories); past that, Spark runs a listing job. A bucket with
+    no directory reads as an empty page (a feed_path that does not exist
+    still raises). The user_bucket predicate stays in the filter, so the
+    scan still reports it as a partition filter.
+    Ordering: (event_timestamp, _batch_id, _seq) DESC — the explicit
+    TIMEUUID-clustering replacement (SURVEY.md §7.3.1). OFFSET is
+    top-(offset+limit) then a row_number slice over that bounded set
     (never a global sort).
 
     The pruning predicate recomputes user_bucket, so its modulus MUST
@@ -771,7 +817,18 @@ def read_user_feed(
             f"{n_user_buckets}; pruning with the wrong modulus would "
             "silently return wrong pages"
         )
-    feed = spark.read.parquet(feed_path)
+    bucket = user_bucket_of(spark, user_id, n_user_buckets)
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(
+        feed_path, f"activity_date=*/user_bucket={bucket}"
+    )
+    fs = pattern.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    dirs = [st.getPath().toString() for st in fs.globStatus(pattern) or []]
+    feed = (
+        spark.read.schema(FEED_TABLE_SCHEMA)
+        .option("basePath", feed_path)
+        .parquet(*dirs)
+    )
     return _page_from_frame(feed, user_id, limit, offset, n_user_buckets)
 
 
@@ -835,7 +892,11 @@ class FeedCache:
         if self._frame is None:
             recorded = read_feed_meta(self.spark, self.feed_path)
             self._buckets = recorded if recorded is not None else N_USER_BUCKETS
-            self._frame = self.spark.read.parquet(self.feed_path).persist()
+            self._frame = (
+                self.spark.read.schema(FEED_TABLE_SCHEMA)
+                .parquet(self.feed_path)
+                .persist()
+            )
         return self._frame, self._buckets
 
     def page(self, user_id: str, limit: int = 100, offset: int = 0) -> DataFrame:
