@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -363,26 +364,100 @@ def test_feed_table_read_path(spark, tmp_path):
     assert [r.metadata["primary_key_value"] for r in user2] == ["17", "16", "10", "7"]
 
 
+MALFORMED_LINES = ["{not json", "", "42", '"just a string"']
+
+
+def _feed_rows(spark, feed: str) -> list[tuple]:
+    """Every column of a feed table but the per-run activity_id, as
+    sortable tuples (the metadata map as sorted items)."""
+    rows = spark.read.parquet(feed).drop("activity_id").collect()
+    return sorted(
+        tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r)
+        for r in rows
+    )
+
+
 def test_dual_output_pipeline_with_dead_letters(spark, tmp_path):
     """One stream → feed table AND reasoned dead-letter table from a
     single parse (no silent drops in streaming mode — the anti-
-    `except: pass`). Counts must partition the input exactly: 11 events
-    = 6 canonical + 5 dead-lettered."""
+    `except: pass`). Feed rows and dead letters account for every
+    streamed line exactly once, the stream's reasons are the batch
+    dead_letters' reasons, and the single-output arm writes the same
+    feed rows."""
+    from user_feed_cdc_spark.streaming.cdc_pipeline import parse_cdc
+
+    lines = fixture_lines() + MALFORMED_LINES
     src = tmp_path / "cdc_in"
     feed = str(tmp_path / "feed")
     dl = str(tmp_path / "dead")
     src.mkdir()
-    (src / "b.jsonl").write_text("\n".join(fixture_lines()) + "\n")
+    (src / "b.jsonl").write_text("\n".join(lines) + "\n")
     q = run_cdc_pipeline(
         spark, str(src), feed, str(tmp_path / "ck"), dead_letter_path=dl
     )
     q.awaitTermination()
-    assert spark.read.parquet(feed).count() == 6
-    dls = spark.read.parquet(dl)
-    assert dls.count() == 5
-    reasons = {r.reason: r.n for r in
-               dls.groupBy("reason").agg(F.count(F.lit(1)).alias("n")).collect()}
+
+    dead = sorted((r.raw_value, r.reason) for r in spark.read.parquet(dl).collect())
+    fed = sorted(
+        int(r.metadata["primary_key_value"]) for r in spark.read.parquet(feed).collect()
+    )
+    dead_values = [v for v, _ in dead]
+    kept = [ln for ln in lines if ln not in dead_values]
+    assert len(fed) + len(dead) == len(lines)
+    assert sorted(dead_values + kept) == sorted(lines)
+    assert fed == sorted(json.loads(ln)["id"] for ln in kept) == [7, 8, 9, 10, 16, 17]
+
+    reasons = Counter(reason for _, reason in dead)
+    malformed = reasons.pop("unparseable_json", 0) + reasons.pop("missing_source_table", 0)
+    assert malformed == len(MALFORMED_LINES)
     assert reasons == {"non_create_op": 3, "missing_source_ts": 1, "unknown_table": 1}
+
+    raw = spark.createDataFrame([(ln,) for ln in lines], "value string")
+    batch = sorted(
+        (r.raw_value, r.reason) for r in dead_letters(parse_cdc(raw)).collect()
+    )
+    assert dead == batch
+
+    single = str(tmp_path / "single")
+    run_cdc_pipeline(spark, str(src), single, str(tmp_path / "ck_single")).awaitTermination()
+    assert _feed_rows(spark, single) == _feed_rows(spark, feed)
+
+
+def test_routing_is_built_once_per_query(spark, tmp_path, monkeypatch):
+    """The dual-output query builds its CDC routing once, when it
+    starts: three live micro-batches run that one streaming projection
+    instead of rebuilding the parse/validate/demux plan per batch."""
+    from user_feed_cdc_spark.streaming import cdc_pipeline
+
+    real = cdc_pipeline._demux_columns
+    calls = []
+
+    def counting(p):
+        calls.append(p)
+        return real(p)
+
+    monkeypatch.setattr(cdc_pipeline, "_demux_columns", counting)
+    src = tmp_path / "cdc_in"
+    staging = tmp_path / "staging"
+    src.mkdir()
+    staging.mkdir()
+    feed = str(tmp_path / "feed")
+    q = run_cdc_pipeline(
+        spark, str(src), feed, str(tmp_path / "ck"),
+        available_now=False, dead_letter_path=str(tmp_path / "dead"),
+    )
+    try:
+        for i, line in enumerate(fixture_lines()[:3]):
+            # publish whole files: the source must never list a partial one
+            (staging / f"b{i}.jsonl").write_text(line + "\n")
+            os.replace(staging / f"b{i}.jsonl", src / f"b{i}.jsonl")
+            q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert len(batches) == 3
+    assert len(calls) == 1
+    assert spark.read.parquet(feed).count() == 3
 
 
 def test_connector_option_plumbing():
@@ -610,6 +685,14 @@ def test_read_user_feed_order_pagination_pruning(spark, tmp_path):
     plan = page._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan, "scan lost its PartitionFilters section"
     assert "user_bucket" in plan.split("PartitionFilters", 1)[1][:200]
+
+    # the offset page is one bounded top-k that skips the first rows
+    offset_plan = (
+        read_user_feed(spark, feed, "2", limit=2, offset=2)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "TakeOrderedAndProject(limit=4, offset=2," in offset_plan, offset_plan
+    assert "Window" not in offset_plan, offset_plan
 
 
 def test_feed_meta_records_and_validates_bucket_count(spark, tmp_path):

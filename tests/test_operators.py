@@ -3791,6 +3791,40 @@ def test_fan_out_estimate_matches_rdd_probe(spark, sf_dir):
     )
 
 
+def test_fan_out_partition_pruned_scan_matches_rdd_probe(spark, tmp_path):
+    """inputFiles() lists every file of a partitioned table, not the ones
+    a partition filter keeps: on a pruned scan, fan_out must size from
+    the real scan (the RDD probe), and the estimate must refuse
+    partitioned and non-parquet relations."""
+    from pyspark.sql import functions as F
+
+    from user_feed_cdc_spark.sources.tables import (
+        _scan_partition_estimate,
+        fan_out,
+    )
+
+    path = str(tmp_path / "parts")
+    (
+        spark.range(64)
+        .withColumn("k", F.col("id") % 8)
+        .repartition(8, "k")
+        .write.partitionBy("k")
+        .parquet(path)
+    )
+    table = spark.read.parquet(path)
+    pruned = table.filter(F.col("k") == 3)
+    target = 4
+    probe = pruned.rdd.getNumPartitions()
+    # the unpruned file list alone would need no repartition
+    assert probe < target <= len(table.inputFiles())
+    assert fan_out(pruned, target).rdd.getNumPartitions() == target
+    assert _scan_partition_estimate(pruned) is None
+
+    csv = str(tmp_path / "csv")
+    spark.range(8).write.csv(csv)
+    assert _scan_partition_estimate(spark.read.csv(csv)) is None
+
+
 def test_size_conf_units_and_malformed_fallback(spark, sf_dir, monkeypatch):
     """_size_bytes reads every suffix Spark accepts ('1t' included), and
     a size conf it cannot parse sends fan_out to the RDD probe instead

@@ -347,9 +347,11 @@ def test_offset_page_window_is_limit_bounded(spark, sf_dir):
     _assert_window_input_limited(plan)
 
 
-def test_feed_table_page_window_is_limit_bounded(spark):
-    """_page_from_frame (the feed-table/cache read path): same contract
-    on the streaming-materialized layout."""
+def test_feed_table_page_offset_is_one_take_ordered(spark):
+    """_page_from_frame (the feed-table/cache read path) serves an
+    OFFSET page from ONE bounded operator: a TakeOrderedAndProject of
+    offset+limit rows that skips the first `offset` — no Window over the
+    page and no global sort."""
     from pyspark.sql import types as T
 
     from user_feed_cdc_spark.streaming.cdc_pipeline import _page_from_frame
@@ -365,7 +367,9 @@ def test_feed_table_page_window_is_limit_bounded(spark):
     )
     feed = spark.createDataFrame([], schema)
     plan = _executed_plan(_page_from_frame(feed, "7", limit=10, offset=10, n_user_buckets=32))
-    _assert_window_input_limited(plan)
+    head = plan.split("== Initial Plan ==")[0]
+    assert head.count("TakeOrderedAndProject(limit=20, offset=10,") == 1, plan
+    assert "Window" not in head and "Exchange" not in head, plan
 
 
 def test_repetition_scores_column_pruning(spark, sf_dir):

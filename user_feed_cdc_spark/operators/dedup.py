@@ -378,7 +378,13 @@ def _cluster_by_bands(
     partition-count independent, so results are identical at any
     width. The session conf is restored after the driver-synced loop;
     the RETURNED frame's plan executes later, under the caller's
-    conf."""
+    conf.
+
+    Not safe with concurrent queries on the same session: the temporary
+    spark.sql.shuffle.partitions change is session-wide, so a query
+    planned meanwhile on another thread (a live streaming micro-batch,
+    say) plans its shuffles at the narrowed width until the loop ends.
+    ROADMAP open item 5 replaces this with a per-plan width."""
     if loop_partitions is None:
         loop_partitions = _loop_partitions(bands)
     spark = bands.sparkSession

@@ -154,6 +154,29 @@ def _size_bytes(v: str | None, default: int) -> int:
     return int(s)
 
 
+def _is_plain_parquet_scan(plan) -> bool:
+    """Whether an analyzed logical plan (a py4j handle) is a chain of
+    Project/Filter/SubqueryAlias nodes over ONE unpartitioned parquet file
+    relation — the only shape whose scan partitioning _scan_partition_
+    estimate can recompute from inputFiles(). A partitioned relation is
+    refused because inputFiles() lists every file, not the ones partition
+    pruning keeps; another format, because its split rules differ."""
+    name = plan.nodeName()
+    if name == "LogicalRelation":
+        rel = plan.relation()
+        return (
+            rel.getClass().getSimpleName() == "HadoopFsRelation"
+            and rel.partitionSchema().isEmpty()
+            and rel.fileFormat().getClass().getSimpleName() == "ParquetFileFormat"
+        )
+    children = plan.children()
+    return (
+        name in ("Project", "Filter", "SubqueryAlias")
+        and children.size() == 1
+        and _is_plain_parquet_scan(children.apply(0))
+    )
+
+
 def _scan_partition_estimate(df: DataFrame) -> int | None:
     """Scan partition count of a pure file-source DataFrame, computed
     from its input files WITHOUT forcing the RDD lineage (the r16
@@ -163,25 +186,17 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
     maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
     padded_total / defaultParallelism)), chunks bin-packed in
     size-descending order, closing a partition when it would exceed
-    maxSplitBytes. Returns None when the plan is not file-backed, a
-    size is unreadable or a size conf does not parse — the caller falls
-    back to the RDD probe.
+    maxSplitBytes. Returns None when the plan is not a plain parquet
+    scan (_is_plain_parquet_scan), a size is unreadable or a size conf
+    does not parse — the caller falls back to the RDD probe.
     tests/test_operators.py pins estimate == df.rdd.getNumPartitions()
     on every fan_out input shape."""
-    import re
     from urllib.parse import unquote, urlparse
 
     try:
-        # Only a pure scan pipeline (project/filter over one file
-        # relation) inherits the scan's partitioning — anything else
-        # (an explicit repartition, a join, a Python map) changes the
-        # partition count and must take the exact RDD probe.
-        plan = df._jdf.queryExecution().analyzed().treeString()
-        nodes = {
-            m.group(1)
-            for m in re.finditer(r"^[\s+:\-]*([A-Za-z]+)", plan, re.M)
-        }
-        if not nodes <= {"Project", "Filter", "Relation", "SubqueryAlias"}:
+        # anything but a plain scan (an explicit repartition, a join, a
+        # Python map) changes the partition count: take the RDD probe
+        if not _is_plain_parquet_scan(df._jdf.queryExecution().analyzed()):
             return None
         files = df.inputFiles()
         conf = df.sparkSession.conf

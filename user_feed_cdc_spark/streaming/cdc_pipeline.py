@@ -4,8 +4,9 @@ Re-architecture of the reference's consumer loop (reference:
 event_processor.py:36-113, strategy.py, main.py:25-59) as ONE Structured
 Streaming query:
 
-    source (kafka | file JSONL) → parse meta → validate (__op=='c')
-    → per-table demux → canonical-record union → foreachBatch sink
+    source (kafka | file JSONL) → parse → route (dead-letter reason,
+    per-table demux, feed layout) → foreachBatch split → feed and
+    dead-letter sinks
 
 Design decisions vs the reference:
 - The reference's hand-rolled poll/batch loop (poll(1000), batch_size=1,
@@ -17,6 +18,10 @@ Design decisions vs the reference:
   sparse schema, then when/otherwise per canonical column — each event
   parsed exactly once. Unknown tables land in a dead-letter output
   instead of raising ValueError.
+- The routing is planned once per query, as one streaming projection
+  (route_events); the foreachBatch function only splits each routed
+  micro-batch on its dead-letter reason and writes both parts, instead
+  of rebuilding the parse/validate/demux plan in Python per batch.
 - uuid1() time-ordering (strategy.py:36) is split into uuid() for
   uniqueness + explicit (event_timestamp, _batch_id, _seq) ordering
   (SURVEY.md §7.3.1).
@@ -26,8 +31,9 @@ Design decisions vs the reference:
   replay; the Cassandra connector is a sink_format swap.
 
 Transforms are pure column expressions shared verbatim between batch
-and streaming (same function, both paths), so the batch oracle check in
-operators/cdc.py certifies the streaming semantics too.
+and streaming (same function, both paths), and one predicate,
+dead_letter_reason, decides feed vs dead letter everywhere, so the batch
+oracle check in operators/cdc.py certifies the streaming semantics too.
 """
 
 from __future__ import annotations
@@ -36,17 +42,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F, types as T
 
 from user_feed_cdc_spark.schemas import ACTIVITY_SCHEMA, CDC_TABLES, MERGED_CDC_SCHEMA
-
-# Minimal schema to route an event before full payload parsing.
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("__op", T.StringType()),
-        T.StructField("__table", T.StringType()),
-        T.StructField("__source_ts_ms", T.LongType()),
-        T.StructField("__source_table", T.StringType()),
-    ]
-)
-
 
 def _meta_map(payload) -> Column:
     """Common metadata map (reference: strategy.py:39-46,67-75 — every
@@ -121,14 +116,20 @@ def canonical_columns(table: str, payload) -> list[Column]:
 VALID_OP = "c"  # creates only (reference: strategy.py:14-17)
 
 
-def is_valid(meta) -> Column:
-    """Validation predicate (reference: strategy.py:12-18): required
-    metadata present and op == 'c'."""
+def dead_letter_reason(p) -> Column:
+    """Why a parsed event `p` (parse_cdc's `_p`) leaves the feed, or NULL
+    for a feed row. THE validation predicate (reference: strategy.py:12-18,
+    required metadata present and op == 'c'; strategy.py:148-149, unknown
+    tables): the stream routes on it, and the batch normalize_events and
+    dead_letters filter on it, so the two outputs partition every event."""
     return (
-        meta["__op"].isNotNull()
-        & meta["__table"].isNotNull()
-        & meta["__source_ts_ms"].isNotNull()
-        & (meta["__op"] == VALID_OP)
+        F.when(p.isNull(), "unparseable_json")
+        .when(p["__source_table"].isNull(), "missing_source_table")
+        .when(~p["__source_table"].isin(*CDC_TABLES), "unknown_table")
+        .when(p["__op"].isNull(), "missing_op")
+        .when(p["__source_ts_ms"].isNull(), "missing_source_ts")
+        .when(p["__table"].isNull(), "missing_table")
+        .when(p["__op"] != VALID_OP, "non_create_op")
     )
 
 
@@ -142,31 +143,27 @@ _CANONICAL_COL_NAMES = (
 )
 
 
-def _parsed_with_seq(raw: DataFrame, value_col: str) -> DataFrame:
-    """Shared scaffold of both normalize paths: the streaming-safe _seq
-    assignment (monotonically_increasing_id is illegal on streaming
-    plans — there the sink assigns it per micro-batch) and acceptance of
-    a pre-parsed `_p` column (parse_cdc) so batch callers parse once and
-    share the frame with dead_letters."""
-    seq = (
-        F.lit(None).cast("long")
-        if raw.isStreaming
-        else F.monotonically_increasing_id()
-    )
-    if "_p" in raw.columns:
-        return raw.select("_p", seq.alias("_seq"))
-    return raw.select(
-        F.from_json(F.col(value_col), MERGED_CDC_SCHEMA).alias("_p"),
-        seq.alias("_seq"),
-    )
+def _parsed(raw: DataFrame, value_col: str) -> DataFrame:
+    """(value, _p): raw JSON values parsed once by parse_cdc, or a frame
+    parse_cdc already produced, as is — so batch callers can parse once
+    and share the frame between normalize_events and dead_letters."""
+    return raw if "_p" in raw.columns else parse_cdc(raw, value_col)
+
+
+def _source_seq(raw: DataFrame) -> Column:
+    """_seq for rows of `raw`: monotonically_increasing_id in batch, NULL
+    on a streaming plan, where that function is illegal and the sink
+    assigns _seq per micro-batch (_with_batch_seq)."""
+    if raw.isStreaming:
+        return F.lit(None).cast("long")
+    return F.monotonically_increasing_id()
 
 
 def _demux_columns(p) -> list[Column]:
     """The single-pass when/otherwise demux: each canonical column picks
     its table's transform expression by __source_table. ONE definition —
-    normalize_events and normalize_changes must demux identically, and a
-    change here propagates to both (they diverge only in validation and
-    output shape)."""
+    normalize_events, the stream routing and normalize_changes must demux
+    identically, and a change here propagates to all of them."""
     per_table = {t: canonical_columns(t, p) for t in CDC_TABLES}
     out_cols = []
     for i, name in enumerate(_CANONICAL_COL_NAMES):
@@ -177,6 +174,18 @@ def _demux_columns(p) -> list[Column]:
             col = col.when(p["__source_table"] == t, per_table[t][i])
         out_cols.append(col.alias(name))
     return out_cols
+
+
+def _activity_columns(p, seq: Column) -> list[Column]:
+    """Canonical activity columns in ACTIVITY_SCHEMA order, then _seq:
+    the demux plus a uuid() activity_id."""
+    demuxed = _demux_columns(p)
+    return [
+        demuxed[0],  # user_id
+        F.expr("uuid()").alias("activity_id"),
+        *demuxed[1:],
+        seq.alias("_seq"),
+    ]
 
 
 def _with_batch_seq(batch_df: DataFrame, batch_id: int) -> DataFrame:
@@ -204,7 +213,8 @@ def normalize_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
     re-derived the input ~4-20× (the round-1 bench's dominant cost) and a
     streaming run kept per-branch source scans. One pass, all narrow
     operations, zero shuffles — at 100 TB this runs at source parallelism
-    and reads each byte exactly once.
+    and reads each byte exactly once. An event is kept when
+    dead_letter_reason is NULL — the predicate the stream routes on.
 
     `_seq` is the monotonic tiebreaker standing in for the reference's
     TIMEUUID clustering order (strategy.py:36 uuid1(),
@@ -215,15 +225,11 @@ def normalize_events(raw: DataFrame, value_col: str = "value") -> DataFrame:
     partition, which is exactly the reference's per-consumer arrival
     order guarantee.
     """
-    parsed = _parsed_with_seq(raw, value_col)
     p = F.col("_p")
-    valid = parsed.filter(is_valid(p) & p["__source_table"].isin(*CDC_TABLES))
-    out_cols = _demux_columns(p)
-    return valid.select(
-        out_cols[0],  # user_id
-        F.expr("uuid()").alias("activity_id"),
-        *out_cols[1:],
-        "_seq",
+    return (
+        _parsed(raw, value_col)
+        .filter(dead_letter_reason(p).isNull())
+        .select(*_activity_columns(p, _source_seq(raw)))
     )
 
 
@@ -245,9 +251,8 @@ def normalize_changes(raw: DataFrame, value_col: str = "value") -> DataFrame:
     ordering columns. Validation matches normalize_events except the op
     set; non-c/u/d ops (snapshot reads) and unknown tables still fall to
     dead_letters."""
-    parsed = _parsed_with_seq(raw, value_col)
     p = F.col("_p")
-    valid = parsed.filter(
+    valid = _parsed(raw, value_col).filter(
         p["__op"].isNotNull()
         & p["__table"].isNotNull()
         & p["__source_ts_ms"].isNotNull()
@@ -262,8 +267,23 @@ def normalize_changes(raw: DataFrame, value_col: str = "value") -> DataFrame:
         ),
         *out_cols,
         p["__op"].alias("op"),
-        "_seq",
+        _source_seq(raw).alias("_seq"),
     )
+
+
+def _start_foreach_batch(
+    stream: DataFrame, write_batch, checkpoint: str, available_now: bool
+):
+    """Start `stream` as a checkpointed append query whose micro-batches
+    go to `write_batch`; availableNow drains what is there and stops."""
+    writer = (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def write_feed_upsert_stream(
@@ -293,14 +313,7 @@ def write_feed_upsert_stream(
             .parquet(state_path)
         )
 
-    writer = (
-        changes.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(changes, write_batch, checkpoint, available_now)
 
 
 def read_feed_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -369,25 +382,11 @@ def dead_letters(raw: DataFrame, value_col: str = "value") -> DataFrame:
     silent `except: pass` (event_processor.py:111-113) and ValueError on
     unknown tables (strategy.py:148-149). Accepts either raw values or
     the parse_cdc pre-parsed form."""
-    if "_p" in raw.columns:
-        tagged = raw.withColumn("_meta", F.col("_p"))
-    else:
-        meta = F.from_json(F.col(value_col), META_SCHEMA)
-        tagged = raw.withColumn("_meta", meta)
-    known = F.col("_meta")["__source_table"].isin(*CDC_TABLES)
-    reason = (
-        F.when(F.col("_meta").isNull(), "unparseable_json")
-        .when(F.col("_meta")["__source_table"].isNull(), "missing_source_table")
-        .when(~known, "unknown_table")
-        .when(F.col("_meta")["__op"].isNull(), "missing_op")
-        .when(F.col("_meta")["__source_ts_ms"].isNull(), "missing_source_ts")
-        .when(F.col("_meta")["__table"].isNull(), "missing_table")
-        .when(F.col("_meta")["__op"] != VALID_OP, "non_create_op")
-    )
+    reason = dead_letter_reason(F.col("_p"))
     return (
-        tagged.withColumn("reason", reason)
+        _parsed(raw, value_col)
+        .select(F.col("value").alias("raw_value"), reason.alias("reason"))
         .filter(F.col("reason").isNotNull())
-        .select(F.col(value_col).alias("raw_value"), "reason")
     )
 
 
@@ -617,14 +616,7 @@ def write_feed_stream(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _write_feed_batch(batch_df, batch_id, feed_path, sink_format)
 
-    writer = (
-        out.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(out, write_batch, checkpoint, available_now)
 
 
 def _write_feed_batch(
@@ -797,9 +789,9 @@ def read_user_feed(
     still raises). The user_bucket predicate stays in the filter, so the
     scan still reports it as a partition filter.
     Ordering: (event_timestamp, _batch_id, _seq) DESC — the explicit
-    TIMEUUID-clustering replacement (SURVEY.md §7.3.1). OFFSET is
-    top-(offset+limit) then a row_number slice over that bounded set
-    (never a global sort).
+    TIMEUUID-clustering replacement (SURVEY.md §7.3.1). OFFSET rides
+    the same bounded top-(offset+limit) operator that skips the first
+    `offset` rows (never a global sort).
 
     The pruning predicate recomputes user_bucket, so its modulus MUST
     match the one the table was written with — a mismatch silently
@@ -840,23 +832,16 @@ def _page_from_frame(
         F.col("_batch_id").desc(),
         F.col("_seq").desc(),
     ]
-    page = (
+    # one bounded top-k: TakeOrderedAndProject(limit=offset+limit,
+    # offset=offset); Catalyst drops a zero offset
+    return (
         feed.filter(
             (F.col("user_bucket") == user_bucket_expr(F.lit(user_id), n_user_buckets))
             & (F.col("user_id") == user_id)
         )
         .orderBy(*order)
         .limit(offset + limit)
-    )
-    if offset == 0:
-        return page
-    from pyspark.sql import Window as W
-
-    w = W.orderBy(*order)  # single partition of ≤ offset+limit rows — bounded
-    return (
-        page.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > offset)
-        .drop("_rn")
+        .offset(offset)
     )
 
 
@@ -912,6 +897,23 @@ class FeedCache:
             self._buckets = None
 
 
+def route_events(raw: DataFrame) -> DataFrame:
+    """The CDC routing as ONE projection over parse_cdc(raw): value, the
+    dead-letter reason (NULL for a feed row), the canonical activity
+    columns with a NULL _seq (the sink assigns it per micro-batch), and
+    the feed layout columns activity_date and user_bucket. Built once
+    per streaming query; each micro-batch only splits it on reason."""
+    p = F.col("_p")
+    acts = _activity_columns(p, F.lit(None).cast("long"))
+    return parse_cdc(raw).select(
+        "value",
+        dead_letter_reason(p).alias("reason"),
+        *acts,
+        F.to_date(acts[3]).alias("activity_date"),  # event_timestamp
+        user_bucket_expr(acts[0]).alias("user_bucket"),  # user_id
+    )
+
+
 def run_cdc_pipeline(
     spark: SparkSession,
     source_path: str,
@@ -920,38 +922,40 @@ def run_cdc_pipeline(
     available_now: bool = True,
     dead_letter_path: str | None = None,
 ):
-    """End-to-end: file JSONL source → normalize → partitioned feed table.
-    Returns the StreamingQuery (lifecycle: query.stop()/awaitTermination —
-    replaces the reference's /start //stop control plane, main.py:84-121).
+    """End-to-end: file JSONL source → route_events → partitioned feed
+    table. Returns the StreamingQuery (lifecycle: query.stop()/
+    awaitTermination — replaces the reference's /start //stop control
+    plane, main.py:84-121).
 
-    With ``dead_letter_path``, the SAME stream (one source, one
-    checkpoint, ONE merged-schema parse via parse_cdc) fans out inside
-    foreachBatch to both the feed table and a reasoned dead-letter table
-    — closing the reference's silent-drop path (`except: pass`,
-    event_processor.py:111-113) in streaming mode too, not just in the
-    batch certification. A second streaming query would re-read and
-    re-parse the source; the multi-output foreachBatch doesn't."""
-    raw = file_json_stream(spark, source_path)
-    if dead_letter_path is None:
-        activities = normalize_events(raw)
-        return write_feed_stream(activities, feed_path, checkpoint, available_now)
-
-    parsed = parse_cdc(raw)
-    # same bucket-contract sidecar the single-output path writes: without
-    # it read_feed_meta returns None and a reader pruning with a different
-    # modulus gets no mismatch error (the silent failure the sidecar
-    # exists to prevent)
+    The routing (parse, validate, demux, feed layout) is planned once
+    per query as the single route_events projection; the micro-batch
+    function only splits the routed batch on its dead-letter reason and
+    writes it. Feed rows go through _write_feed_batch. With
+    ``dead_letter_path``, the batch is persisted so the one parse serves
+    both outputs, and the other rows land in a reasoned dead-letter
+    table — closing the reference's silent-drop path (`except: pass`,
+    event_processor.py:111-113) in streaming mode too. A second
+    streaming query would re-read and re-parse the source; the
+    multi-output foreachBatch doesn't."""
+    routed = route_events(file_json_stream(spark, source_path))
+    # record the bucketing contract with the table so readers can
+    # validate instead of silently pruning with the wrong modulus
     write_feed_meta(spark, feed_path, N_USER_BUCKETS)
 
-    def write_both(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()  # parse once, serve both outputs
-        acts = normalize_events(batch_df).withColumn(
-            "activity_date", F.to_date("event_timestamp")
-        ).withColumn("user_bucket", user_bucket_expr(F.col("user_id")))
-        _write_feed_batch(acts, batch_id, feed_path)
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if dead_letter_path is not None:
+            batch_df = batch_df.persist()
+        feed_rows = batch_df.filter(F.col("reason").isNull())
+        _write_feed_batch(feed_rows.drop("value", "reason"), batch_id, feed_path)
+        if dead_letter_path is None:
+            return
         (
-            dead_letters(batch_df)
-            .withColumn("_batch_id", F.lit(batch_id))
+            batch_df.filter(F.col("reason").isNotNull())
+            .select(
+                F.col("value").alias("raw_value"),
+                "reason",
+                F.lit(batch_id).alias("_batch_id"),
+            )
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_batch_id")
@@ -959,14 +963,7 @@ def run_cdc_pipeline(
         )
         batch_df.unpersist()
 
-    writer = (
-        parsed.writeStream.foreachBatch(write_both)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(routed, write_batch, checkpoint, available_now)
 
 
 def pipeline_status(query) -> dict:
