@@ -157,11 +157,14 @@ def test_feed_sink_commits_through_txn_log(spark, tmp_path):
     (sink_format='txnlog'): (a) the txn-log snapshot read returns
     byte-for-byte the same activities as the dynamic-overwrite parquet
     layout over the same source, (b) the log shows one commit per
-    micro-batch with the feed_sink txn watermark, and (c) a replay of
+    micro-batch with the feed_sink txn watermark, (c) the snapshot is
+    read with FEED_TABLE_SCHEMA, so building it runs no Spark job, and
+    (d) a replay of
     the same batches (fresh source checkpoint, same app lineage —
     the redelivery case the watermark exists for) changes nothing."""
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
     from user_feed_cdc_spark.streaming.cdc_pipeline import (
+        FEED_TABLE_SCHEMA,
         file_json_stream,
         read_feed_txnlog,
         write_feed_stream,
@@ -190,6 +193,18 @@ def test_feed_sink_commits_through_txn_log(spark, tmp_path):
         map(tuple, tx.select(*key_cols).collect())
     )
     assert {"activity_date", "user_bucket"} <= set(tx.columns)
+    # read with the fixed schema: same fields, and no inference job
+    assert {f.name: f.dataType for f in tx.schema.fields} == {
+        f.name: f.dataType for f in FEED_TABLE_SCHEMA.fields
+    }
+    sc = spark.sparkContext
+    sc.setJobGroup("read_feed_txnlog_build", "txn-log feed read build")
+    try:
+        read_feed_txnlog(spark, str(tmp_path / "feed_tx"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("read_feed_txnlog_build")) == []
 
     w = TxnLogWriter(str(tmp_path / "feed_tx"))
     assert w.latest_version() == 0  # one micro-batch -> one commit

@@ -3064,28 +3064,221 @@ def test_txn_log_snapshot_replay_matters(spark, sf_dir):
     assert naive.count() > n_src  # the removed files are still on disk
 
 
-def test_txn_log_replay_asserts_one_action_per_file_per_commit(spark):
+def test_txn_log_replay_asserts_one_action_per_file_per_commit(tmp_path):
     """r10 VERDICT item 1: a log carrying add+remove of the SAME file
     in ONE commit has no defined replay order — the replay must refuse
     loudly instead of resolving by a tiebreak. Valid histories (remove
     and re-add across DIFFERENT commits) still replay fine."""
+    import json
+
     import pytest
 
-    from user_feed_cdc_spark.sources.formats import _replay_live_files
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    ok = spark.createDataFrame(
+    def write_log(name, rows):
+        log_dir = tmp_path / name / "_log"
+        log_dir.mkdir(parents=True)
+        for version, action, file in rows:
+            with open(log_dir / f"{version:05d}.json", "a") as f:
+                f.write(
+                    json.dumps(
+                        {"version": version, "action": action, "file": file}
+                    )
+                    + "\n"
+                )
+        return TxnLogWriter(str(tmp_path / name))
+
+    ok = write_log(
+        "ok",
         [(0, "add", "f0"), (1, "remove", "f0"), (2, "add", "f0"),
          (0, "add", "f1"), (1, "remove", "f1")],
-        "version long, action string, file string",
     )
-    assert _replay_live_files(ok) == ["f0"]
+    assert ok.live_files() == ["f0"]
 
-    bad = spark.createDataFrame(
-        [(0, "add", "f0"), (0, "remove", "f0"), (0, "add", "f1")],
-        "version long, action string, file string",
+    bad = write_log(
+        "bad", [(0, "add", "f0"), (0, "remove", "f0"), (0, "add", "f1")]
     )
     with pytest.raises(ValueError, match="one-action-per-file-per-commit"):
-        _replay_live_files(bad)
+        bad.live_files()
+
+
+# Registry entries whose read resolves its snapshot through
+# TxnLogWriter's replay, with the fixture builder each one calls.
+_TXN_LOG_READERS = {
+    "source_txn_log_snapshot": "_txn_log_table",
+    "source_txn_log_time_travel": "_txn_log_table",
+    "source_txn_log_checkpoint": "_txn_log_ckpt_table",
+    "source_txn_log_writer_roundtrip": "_txn_writer_table",
+    "source_txn_log_multipart_checkpoint": "_txn_multipart_table",
+    "source_txn_log_deletes": "_txn_log_dv_table",
+    "source_txn_log_data_skipping": "_txn_log_stats_table",
+    "source_txn_log_bloom_index": "_txn_log_bloom_table",
+    "source_txn_log_delete_rewrite": "_txn_delete_table",
+    "source_txn_log_optimize_cluster": "_txn_optimize_table",
+    "source_txn_log_schema_evolution": "_txn_schema_evo_table",
+    "source_txn_log_optimize_zorder": "_txn_zorder_table",
+    "source_txn_log_timestamp_travel": "_txn_ts_table",
+    "source_txn_log_restore": "_txn_restore_table",
+    "source_txn_log_check_constraints": "_txn_constraints_table",
+}
+
+
+def test_txn_log_reads_build_without_jobs(spark, sf_dir):
+    """Every txn-log reader resolves its live files (and stats, DVs,
+    blooms, schema) by replaying the JSON log on the driver, so
+    building its DataFrame launches no Spark job once the fixture
+    exists. bloom_index keeps the jobs of its data probe (the table's
+    max event_id) plus the one globbed sidecar read."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as em
+    from user_feed_cdc_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    queries = em.queries()
+
+    def jobs_of(group, build):
+        sc.setJobGroup(group, "txn-log read build")
+        build()
+        sc.setJobGroup("", "")
+        return list(tracker.getJobIdsForGroup(group))
+
+    try:
+        probe = jobs_of(
+            "txn_log_build_probe",
+            lambda: load_table(spark, sf_dir, "events")
+            .agg(F.max("event_id"))
+            .first(),
+        )
+        for name in _TXN_LOG_READERS:
+            queries[name](spark, sf_dir)  # warm: build the fixture
+            jobs = jobs_of(
+                f"txn_log_build_{name}", lambda: queries[name](spark, sf_dir)
+            )
+            want = (
+                len(probe) + 1 if name == "source_txn_log_bloom_index" else 0
+            )
+            assert len(jobs) == want, (name, jobs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _txn_fixture_copy(spark, sf_dir, builder, dest):
+    """Copy the named fixture's table to `dest`; returns (root, log_dir)
+    of the copy."""
+    import os
+    import shutil
+
+    from user_feed_cdc_spark.sources import formats
+
+    root, _log = getattr(formats, builder)(spark, sf_dir)
+    shutil.copytree(root, dest)
+    return str(dest), os.path.join(str(dest), "_log")
+
+
+def _append_commit(log_dir, actions):
+    """Write `actions` as the next commit of the log at `log_dir`."""
+    import json
+    import os
+
+    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
+
+    v = TxnLogWriter(os.path.dirname(log_dir)).latest_version() + 1
+    with open(os.path.join(log_dir, f"{v:05d}.json"), "w") as f:
+        for a in actions:
+            f.write(json.dumps({**a, "version": v}) + "\n")
+
+
+def test_txn_log_readers_enforce_reader_version(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The reader-version gate holds on every txn-log reader: a commit
+    demanding a reader newer than this engine makes each HEAD read
+    refuse, while the two time-travel reads, whose version is below
+    the upgrade, still read the same rows."""
+    import pytest
+
+    import __spark_entry__ as em
+    from user_feed_cdc_spark.sources import formats
+    from user_feed_cdc_spark.sources.txn_writer import (
+        SUPPORTED_READER_VERSION,
+    )
+
+    below_upgrade = {
+        "source_txn_log_time_travel",
+        "source_txn_log_timestamp_travel",
+    }
+    queries = em.queries()
+    for name, builder in _TXN_LOG_READERS.items():
+        want = (
+            sorted(queries[name](spark, sf_dir).collect())
+            if name in below_upgrade
+            else None
+        )
+        copy = _txn_fixture_copy(spark, sf_dir, builder, tmp_path / name)
+        _append_commit(
+            copy[1],
+            [{"action": "protocol", "minReader": SUPPORTED_READER_VERSION + 1}],
+        )
+        with monkeypatch.context() as m:
+            m.setattr(formats, builder, lambda _s, _d, c=copy: c)
+            if want is not None:
+                got = sorted(queries[name](spark, sf_dir).collect())
+                assert got == want, name
+            else:
+                with pytest.raises(ValueError, match="reader version"):
+                    queries[name](spark, sf_dir)
+
+
+def test_txn_log_pruning_reads_only_live_files(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Stats and bloom pruning consider only LIVE files: replacing a
+    scanned data file by a byte-identical copy under a new name (one
+    commit: remove the old, add the copy with the same add payload)
+    leaves each pruned read's answer unchanged. A reader that took
+    every add line ever written would scan both and count the rows
+    twice."""
+    import json
+    import os
+    import shutil
+
+    import __spark_entry__ as em
+    from user_feed_cdc_spark.sources import formats
+
+    queries = em.queries()
+    for name in ("source_txn_log_data_skipping", "source_txn_log_bloom_index"):
+        builder = _TXN_LOG_READERS[name]
+        df = queries[name](spark, sf_dir)
+        want = sorted(df.collect())
+        victim = min(f.rstrip("/").split("/")[-2] for f in df.inputFiles())
+        root, log_dir = _txn_fixture_copy(
+            spark, sf_dir, builder, tmp_path / name
+        )
+        with open(os.path.join(log_dir, "00000.json")) as f:
+            (add,) = [
+                a for a in map(json.loads, f) if a.get("file") == victim
+            ]
+        shutil.copytree(
+            os.path.join(root, victim), os.path.join(root, victim + "_copy")
+        )
+        _append_commit(
+            log_dir,
+            [
+                {"action": "remove", "file": victim},
+                {**add, "file": victim + "_copy"},
+            ],
+        )
+        with monkeypatch.context() as m:
+            m.setattr(formats, builder, lambda _s, _d, c=(root, log_dir): c)
+            moved = queries[name](spark, sf_dir)
+            assert sorted(moved.collect()) == want, name
+            scanned = {
+                f.rstrip("/").split("/")[-2] for f in moved.inputFiles()
+            }
+            assert victim not in scanned and victim + "_copy" in scanned
 
 
 def test_txn_writer_concurrent_commits(tmp_path):

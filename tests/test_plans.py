@@ -1313,7 +1313,7 @@ def test_txn_optimize_zorder_prunes_both_dims(spark, sf_dir):
 
     with open(os.path.join(root, "_META")) as f:
         max_user = json.loads(f.readline())["max_user"]
-    lower = _zorder_prune(spark, root, log_dir, "user", 0, max_user // 2 - 1)
+    lower = _zorder_prune(root, "user", 0, max_user // 2 - 1)
     assert lower == ["z0", "z2"], lower
     # CDF silence: the ZORDER publish (v4) changes no data
     assert table_changes(spark, root, log_dir, 4, 4).count() == 0

@@ -46,6 +46,13 @@ from pyspark.sql import functions as F
 
 from user_feed_cdc_spark.schemas import TABLE_SCHEMAS
 from user_feed_cdc_spark.sources.tables import load_table
+from user_feed_cdc_spark.sources.txn_writer import (
+    TxnLogWriter,
+    _last_wins,
+    _newest_action,
+    _newest_dv_of,
+    _winning_adds_of,
+)
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
@@ -892,38 +899,25 @@ def _txn_log_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return root, log_dir
 
 
-def _replay_live_files(log: DataFrame) -> list[str]:
-    """Shared last-action-wins replay of add/remove actions → sorted
-    live file names — the planning step every txn-log read runs. One
-    Spark job aggregates the log per (file, version); the replay then
-    finishes driver-side over planning-scale rows (|distinct file| ×
-    |commits touching it| — exactly what Delta's snapshot resolution
-    holds in driver memory). The ONE-ACTION-PER-FILE-PER-COMMIT
-    invariant the writers hold is ASSERTED here (r10 VERDICT item 1),
-    not assumed: a log carrying add+remove of the same file in one
-    commit has no defined replay order, so it refuses loudly instead
-    of resolving by a tiebreak that looks like collation luck. Across
-    commits the later version wins; a remove ranks above an add only
-    across versions (re-add generalizes correctly)."""
-    rank = F.when(F.col("action") == "remove", F.lit(1)).otherwise(F.lit(0))
-    rows = (
-        log.filter(F.col("action").isin("add", "remove"))
-        .groupBy("file", "version")
-        .agg(F.count("*").alias("n"), F.max(rank).alias("action_rank"))
-        .collect()
-    )  # planning step: one row per (file, commit) — catalog scale
-    dup = [r for r in rows if r.n > 1]
-    if dup:
-        raise ValueError(
-            "transaction log violates one-action-per-file-per-commit: "
-            + ", ".join(f"{r.file}@v{r.version}" for r in dup[:5])
-        )
-    last: dict[str, tuple[int, int]] = {}
-    for r in rows:
-        st = (r.version, r.action_rank)
-        if r.file not in last or st > last[r.file]:
-            last[r.file] = st
-    return sorted(f for f, (_v, a) in last.items() if a == 0)
+def _head_actions(root: str) -> tuple[list[dict], set[str]]:
+    """One replay of the table's log at HEAD (TxnLogWriter's: checkpoint
+    base + tail, one-action-per-file-per-commit, the reader-version
+    gate, the vacuumed-history refusal) -> (actions, live file set),
+    for readers that also need side data (stats, DVs, blooms, schema)
+    from the same actions."""
+    w = TxnLogWriter(root)
+    acts = w._replay_actions(w.latest_version())
+    return acts, set(_last_wins(acts))
+
+
+def _scan_files(
+    spark: SparkSession, root: str, names: list[str] | set[str]
+) -> DataFrame:
+    """Parquet scan of the named data files of the table at `root`
+    with the events schema (no inference job)."""
+    return spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
+        *[os.path.join(root, name) for name in sorted(names)]
+    )
 
 
 @_register("source_txn_log_snapshot", _ROUNDTRIP_ORACLE)
@@ -936,34 +930,25 @@ def source_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (remove two files, add their merged replacement); a reader that
     trusts the directory listing instead of the log double-counts the
     compacted buckets and the value hash fails loudly — the gate
-    certifies the log replay itself. Last-action-wins per file is
-    computed as a MAX over (version, action_rank) structs with an
-    EXPLICIT numeric rank (remove=1 > add=0), not string collation:
-    across commits the later version wins (re-added files generalize
-    correctly), and within one commit a remove deliberately beats an
-    add (a file both added and removed in the same commit is dead) —
-    though the log writer holds the one-action-per-file-per-commit
-    invariant, so that tiebreak is defensive, not load-bearing.
+    certifies the log replay itself. The driver replays the JSON log
+    (TxnLogWriter.live_files): last action wins per file, across
+    commits the later version wins (re-added files generalize
+    correctly), and a file touched twice in one commit has no defined
+    order, so the replay refuses it (one-action-per-file-per-commit).
 
     This is file-level time travel, the complement of the row-level
     CDC family (cdc_timetravel_lookup reads a key AS OF a timestamp;
     this reads a TABLE as of a log version). Scale posture: the log
-    replay touches |log| rows and only the FILE LIST reaches the
-    driver (exactly what a production table format's planning phase
+    replay reads |log| JSON lines on the driver and launches no Spark
+    job (exactly what a production table format's planning phase
     does — data files never move until the pruned scan); snapshot
     reads then parallelize over live files like any parquet scan, and
     checkpointing the replayed file list every N commits (Delta's
     _last_checkpoint) bounds replay cost as the log grows."""
-    root, log_dir = _txn_log_table(spark, sf_dir)
-    log = spark.read.schema("version long, action string, file string").json(
-        os.path.join(log_dir, "*.json")
+    root, _log_dir = _txn_log_table(spark, sf_dir)
+    return _fidelity_agg(
+        _scan_files(spark, root, TxnLogWriter(root).live_files())
     )
-    live = _replay_live_files(log)  # planning phase: |files| rows to the
-    # driver, the table-format catalog step — data files themselves
-    # never leave the executors
-    paths = [os.path.join(root, name) for name in live]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
 
 
 # ---------------------------------------------------------------------------
@@ -1037,81 +1022,17 @@ def read_txn_log_checkpointed(
     spark: SparkSession, root: str, log_dir: str
 ) -> DataFrame:
     """The checkpoint read protocol (Delta's `_last_checkpoint`
-    mechanics): load the checkpoint pointer, read the checkpoint's
-    live-file list as the base state, replay ONLY commits with
-    version > checkpoint on top (same last-action-wins MAX-struct as
-    the full replay), and scan the resulting live files. Replay cost
-    is |checkpoint| + |commits since|, bounded no matter how long the
-    table's history grows — `test_txn_log_checkpoint_skips_old_commits`
-    proves pre-checkpoint commit files are never read by deleting
-    them. Exposed as a helper (root/log_dir parameterized) so tests
-    can drive mutated copies."""
-    import json
-
-    with open(os.path.join(log_dir, "_last_checkpoint")) as f:
-        pointer = json.loads(f.readline())
-    ckpt_version, parts = pointer["version"], pointer.get("parts")
-    tail = [
-        os.path.join(log_dir, name)
-        for name in os.listdir(log_dir)  # planning step: |log| names
-        if name.endswith(".json")
-        and ".checkpoint." not in name  # multi-part files end .json too
-        and int(name.split(".")[0]) > ckpt_version
-    ]
-    if parts is None:
-        ckpt_paths = [
-            os.path.join(log_dir, f"{ckpt_version:05d}.checkpoint.json")
-        ]
-    else:
-        # multi-part checkpoint (r15): the pointer names the part
-        # count; a missing part REFUSES rather than replaying a
-        # partial live set. The part files load as ONE distributed
-        # json read — at Delta scale this is the entire point of the
-        # layout (a million-file live set loads in parallel).
-        ckpt_paths = [
-            os.path.join(
-                log_dir,
-                f"{ckpt_version:05d}.checkpoint."
-                f"{i:04d}.{parts:04d}.json",
-            )
-            for i in range(parts)
-        ]
-        missing = [p for p in ckpt_paths if not os.path.exists(p)]
-        if missing:
-            raise ValueError(
-                f"checkpoint v{ckpt_version} is incomplete: "
-                f"{[os.path.basename(p) for p in missing]} missing"
-            )
-    log_schema = "version long, action string, file string, minReader long"
-    base = spark.read.schema(log_schema).json(ckpt_paths)
-    log = (
-        base.unionByName(spark.read.schema(log_schema).json(tail))
-        if tail  # a checkpoint at HEAD has no tail to replay
-        else base
-    )
-    # protocol gate (Delta's minReaderVersion): refuse a table whose
-    # newest protocol action demands a reader newer than this engine —
-    # mirrored from the writer-side replay (txn_writer._replay_actions)
-    from user_feed_cdc_spark.sources.txn_writer import (
-        SUPPORTED_READER_VERSION,
-    )
-
-    newest_proto = (
-        log.filter(F.col("action") == "protocol")
-        .orderBy(F.col("version").desc())
-        .select("minReader")
-        .first()
-    )  # NEWEST-wins, matching the writer-side gate and checkpoint carry
-    need = newest_proto[0] if newest_proto else None
-    if need is not None and need > SUPPORTED_READER_VERSION:
-        raise ValueError(
-            f"table requires reader version {need}; this engine "
-            f"supports {SUPPORTED_READER_VERSION}"
-        )
-    paths = [
-        os.path.join(root, name) for name in _replay_live_files(log)
-    ]
-    return spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
+    mechanics): TxnLogWriter's replay loads the checkpoint named by
+    the pointer (single-file or multi-part; a missing part refuses)
+    as the base state, replays ONLY commits with version > checkpoint
+    on top, applies the reader-version gate, and the live files are
+    scanned. Replay cost is |checkpoint| + |commits since|, bounded
+    no matter how long the table's history grows —
+    `test_txn_log_checkpoint_skips_old_commits` proves pre-checkpoint
+    commit files are never read by deleting them. Exposed as a helper
+    so tests can drive mutated copies; `log_dir` is the table's log,
+    `root/_log`."""
+    return _scan_files(spark, root, TxnLogWriter(root).live_files())
 
 
 @_register("source_txn_log_checkpoint", _ROUNDTRIP_ORACLE)
@@ -1226,26 +1147,13 @@ def source_txn_log_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten (merge-on-read), which is the entire point of DVs at
     100 TB: a 1e5-row delete against a 1e11-row table costs a sidecar
     write, not a rewrite."""
-    root, log_dir = _txn_log_dv_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string, dv string"
-    ).json(os.path.join(log_dir, "*.json"))
-    winning_dv = (
-        log.filter(F.col("action") == "dv")
-        .groupBy("file")
-        .agg(F.max(F.struct(F.col("version"), F.col("dv"))).alias("st"))
-        .select("file", F.col("st.dv").alias("dv"))
-    )
-    live_files = _replay_live_files(log)
-    dv_map = {r.file: r.dv for r in winning_dv.collect()}  # planning step:
-    # |files| + |dv| rows to the driver, like the snapshot read
-    scan = (
-        spark.read.schema(TABLE_SCHEMAS["events"])
-        .parquet(*[os.path.join(root, name) for name in live_files])
-        .withColumn(
-            "_file",
-            F.regexp_extract(F.input_file_name(), "/([^/]+)/[^/]+$", 1),
-        )
+    root, _log_dir = _txn_log_dv_table(spark, sf_dir)
+    acts, live = _head_actions(root)  # planning step: |files| + |dv|
+    # log lines on the driver, like the snapshot read
+    dv_map = _newest_dv_of(acts, live)
+    scan = _scan_files(spark, root, live).withColumn(
+        "_file",
+        F.regexp_extract(F.input_file_name(), "/([^/]+)/[^/]+$", 1),
     )
     dv_schema = "event_id long"
     dv_rows = None
@@ -1349,26 +1257,15 @@ def source_txn_log_data_skipping(
     selective predicate over a range-clustered column turns a
     full-table scan into touching only the matching fraction —
     the reason OPTIMIZE ZORDER / liquid clustering exists."""
-    root, log_dir = _txn_log_stats_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string, min_id long, max_id long"
-    ).json(os.path.join(log_dir, "*.json"))
+    root, _log_dir = _txn_log_stats_table(spark, sf_dir)
+    acts, live = _head_actions(root)
+    stats = _winning_adds_of(acts, live)  # the live files' add stats
     # predicate: event_id <= max/2 (computed from the stats themselves —
     # the planning phase knows the table's max without scanning data)
-    hi = (
-        log.agg(F.max("max_id")).first()[0] // 2
-    )
-    survivors = sorted(
-        r.file
-        for r in log.filter(
-            (F.col("action") == "add") & (F.col("min_id") <= hi)
-        )
-        .select("file")
-        .collect()
-    )  # planning step: |files| rows, exactly the Delta stats-pruning pass
-    scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
-        *[os.path.join(root, name) for name in survivors]
-    )
+    hi = max(a["max_id"] for a in stats.values()) // 2
+    survivors = sorted(f for f, a in stats.items() if a["min_id"] <= hi)
+    # planning step: |files| log lines, exactly the Delta stats-pruning pass
+    scan = _scan_files(spark, root, survivors)
     return _fidelity_agg(scan.filter(F.col("event_id") <= hi))
 
 
@@ -1395,27 +1292,17 @@ def source_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     {f0, f1, f2} — buckets 0..2 of events, a strictly different
     answer than the head snapshot, so the hash gate proves the
     version predicate actually bounded the replay (a reader that
-    ignores it reproduces HEAD and fails loudly). Same last-action-
-    wins MAX-struct mechanics; the version filter is a pushdown on
-    the log scan, not a post-replay subtraction — exactly how
-    Delta/Iceberg resolve `VERSION AS OF v` (replay commits 0..v,
-    or nearest checkpoint <= v plus tail).
+    ignores it reproduces HEAD and fails loudly). The driver replays
+    the JSON log with the same last-action-wins rule, opening only
+    commits 0..v — exactly how Delta/Iceberg resolve `VERSION AS OF
+    v` (replay commits 0..v, or nearest checkpoint <= v plus tail).
 
-    Scale posture: identical to the snapshot read — |log <= v| rows
-    replayed, file list to the driver, parallel scan of the v0
-    files; historical versions cost no data movement beyond their
-    own live files."""
-    root, log_dir = _txn_log_table(spark, sf_dir)
-    log = (
-        spark.read.schema("version long, action string, file string")
-        .json(os.path.join(log_dir, "*.json"))
-        .filter(F.col("version") <= 0)  # VERSION AS OF 0
-    )
-    paths = [
-        os.path.join(root, name) for name in _replay_live_files(log)
-    ]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    Scale posture: identical to the snapshot read — |log <= v| lines
+    replayed on the driver, parallel scan of the v0 files; historical
+    versions cost no data movement beyond their own live files."""
+    root, _log_dir = _txn_log_table(spark, sf_dir)
+    live = TxnLogWriter(root).live_files(as_of=0)  # VERSION AS OF 0
+    return _fidelity_agg(_scan_files(spark, root, live))
 
 
 # ---------------------------------------------------------------------------
@@ -1563,32 +1450,25 @@ def source_txn_log_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the difference between a seek and a table scan; sidecars merge
     per file like any bloom (bit-OR), so compaction rebuilds them
     from the members only."""
-    root, log_dir = _txn_log_bloom_table(spark, sf_dir)
+    root, _log_dir = _txn_log_bloom_table(spark, sf_dir)
     probe = (
         load_table(spark, sf_dir, "events").agg(F.max("event_id")).first()[0]
     )
-    log = spark.read.schema(
-        "version long, action string, file string, bloom string, m long"
-    ).json(os.path.join(log_dir, "*.json"))
-    files = [
-        (r.file, r.bloom, r.m)
-        for r in log.filter(F.col("action") == "add").collect()
-    ]  # planning step: |files| rows
+    acts, live = _head_actions(root)
+    adds = _winning_adds_of(acts, live)  # planning step: |files| lines
     by_bloom = _read_bloom_sidecars(
-        spark, root, [bloomname for _, bloomname, _ in files]
+        spark, root, [a["bloom"] for a in adds.values()]
     )
     survivors = []
-    for fname, bloomname, m in sorted(files):
-        words = by_bloom.get(bloomname, {})
+    for fname, a in sorted(adds.items()):
+        words = by_bloom.get(a["bloom"], {})
         hit = all(
             (words.get(pos // 64, 0) >> (pos % 64)) & 1
-            for pos in _fbloom_positions(probe, m)
+            for pos in _fbloom_positions(probe, a["m"])
         )
         if hit:
             survivors.append(fname)
-    scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
-        *[os.path.join(root, name) for name in survivors]
-    )
+    scan = _scan_files(spark, root, survivors)
     return scan.filter(F.col("event_id") == probe).select(
         "event_id",
         "user_id",
@@ -1870,15 +1750,10 @@ def source_txn_log_delete_rewrite(
     Copy-on-write vs the DV path is the standard read-amplification /
     write-amplification trade: rewrite once and reads stay pure
     scans, or sidecar the deletes and pay an anti-join per read."""
-    root, log_dir = _txn_delete_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string"
-    ).json(os.path.join(log_dir, "*.json"))
-    paths = [
-        os.path.join(root, name) for name in _replay_live_files(log)
-    ]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    root, _log_dir = _txn_delete_table(spark, sf_dir)
+    return _fidelity_agg(
+        _scan_files(spark, root, TxnLogWriter(root).live_files())
+    )
 
 
 _TXN_OPTIMIZE_ORACLE = """
@@ -1983,21 +1858,12 @@ def source_txn_log_optimize_cluster(
     shuffle (a range-partitioned sort), its commit is one JSON file,
     and readers racing it see the old or new layout atomically, never
     a mix (last-action-wins replay)."""
-    root, log_dir = _txn_optimize_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string, min_id long, max_id long"
-    ).json(os.path.join(log_dir, "*.json"))
-    live = set(_replay_live_files(log))
-    stats = {
-        r.file: (r.min_id, r.max_id)
-        for r in log.filter(F.col("action") == "add").collect()
-        if r.file in live
-    }  # planning step: |files| rows
-    hi = max(mx for _mn, mx in stats.values()) // 4
-    survivors = sorted(f for f, (mn, _mx) in stats.items() if mn <= hi)
-    scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
-        *[os.path.join(root, name) for name in survivors]
-    )
+    root, _log_dir = _txn_optimize_table(spark, sf_dir)
+    acts, live = _head_actions(root)
+    stats = _winning_adds_of(acts, live)  # planning step: |files| lines
+    hi = max(a["max_id"] for a in stats.values()) // 4
+    survivors = sorted(f for f, a in stats.items() if a["min_id"] <= hi)
+    scan = _scan_files(spark, root, survivors)
     return _fidelity_agg(scan.filter(F.col("event_id") <= hi))
 
 
@@ -2099,29 +1965,19 @@ def source_txn_log_optimize_dv(
     into clean scans, at rewrite cost ∝ data in DV'd files only.
     dataChange=False keeps CDF exactly-once: the deletes were emitted
     when the dv actions landed, the compaction emits nothing."""
-    from user_feed_cdc_spark.sources.txn_writer import (
-        TxnLogWriter,
-        _newest_dv_of,
-    )
-
     root = _txn_dv_optimize_table(spark, sf_dir)
-    w = TxnLogWriter(root)
-    live = w.live_files()
-    acts = w._replay_actions(w.latest_version())
-    residual = _newest_dv_of(acts, set(live))
+    acts, live = _head_actions(root)
+    residual = _newest_dv_of(acts, live)
     if residual:
         raise ValueError(
             f"OPTIMIZE left live files with deletion vectors: {residual}"
         )
     untouched = {f"f{b}" for b in (0, 2, 4, 5)}
-    if not untouched <= set(live) or not {"c_f1", "c_f3"} <= set(live):
+    if not untouched <= live or not {"c_f1", "c_f3"} <= live:
         raise ValueError(
             f"unexpected post-OPTIMIZE live set: {sorted(live)}"
         )
-    scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
-        *[os.path.join(root, name) for name in live]
-    )
-    return _fidelity_agg(scan)
+    return _fidelity_agg(_scan_files(spark, root, live))
 
 
 def _txn_compact_table(spark: SparkSession, sf_dir: str) -> str:
@@ -2224,16 +2080,12 @@ def source_txn_log_compact_small_files(
     planning is O(|files|) driver-side log math, the rewrite touches
     only over-sharded bytes, and readers racing the commit see old or
     new layout atomically, never a mix."""
-    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
-
     root = _txn_compact_table(spark, sf_dir)
-    w = TxnLogWriter(root)
-    live = w.live_files()
+    acts, live = _head_actions(root)
     if len(live) > 8:
         raise ValueError(
             f"compaction left {len(live)} live files of 16 — no shrink"
         )
-    acts = w._replay_actions(w.latest_version())
     n_adds = sum(
         1
         for a in acts
@@ -2250,10 +2102,7 @@ def source_txn_log_compact_small_files(
             f"{n_removes} removed fragments — a single-file bin was "
             "pointlessly rewritten"
         )
-    scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
-        *[os.path.join(root, name) for name in live]
-    )
-    return _fidelity_agg(scan)
+    return _fidelity_agg(_scan_files(spark, root, live))
 
 
 _TXN_SCHEMA_EVO_ORACLE = """
@@ -2338,22 +2187,12 @@ def source_txn_log_schema_evolution(
     Scale posture: schema changes are one JSON line; no data file is
     ever touched by an ADD COLUMN, and every later scan still prunes
     and pushes down on the explicit schema exactly as before."""
-    import json as _json
-
-    root, log_dir = _txn_schema_evo_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string, schema string"
-    ).json(os.path.join(log_dir, "*.json"))
-    newest_schema = (
-        log.filter(F.col("action") == "metaData")
-        .orderBy(F.col("version").desc())
-        .select("schema")
-        .first()[0]
-    )  # planning step: one row
-    paths = [
-        os.path.join(root, name) for name in _replay_live_files(log)
-    ]
-    snapshot = spark.read.schema(newest_schema).parquet(*paths)
+    root, _log_dir = _txn_schema_evo_table(spark, sf_dir)
+    acts, live = _head_actions(root)
+    newest_schema = _newest_action(acts, "metaData")["schema"]
+    snapshot = spark.read.schema(newest_schema).parquet(
+        *[os.path.join(root, name) for name in sorted(live)]
+    )
     return snapshot.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -3119,27 +2958,18 @@ def _txn_zorder_table(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return root, log_dir
 
 
-def _zorder_prune(
-    spark: SparkSession, root: str, log_dir: str, dim: str, lo: int, hi: int
-) -> list[str]:
+def _zorder_prune(root: str, dim: str, lo: int, hi: int) -> list[str]:
     """Stats-prune the live files of the ZORDER table on one dimension
     (`user` or `hour`): survivors are files whose [min,max] interval
     on that dimension intersects [lo, hi] — the Delta data-skipping
     pass, now effective on BOTH dimensions because the layout is
-    Morton-clustered. Planning scale: |files| log rows."""
-    log = spark.read.schema(
-        "version long, action string, file string, "
-        "user_min long, user_max long, hour_min long, hour_max long"
-    ).json(os.path.join(log_dir, "*.json"))
-    live = set(_replay_live_files(log))
+    Morton-clustered. Planning scale: |files| log lines."""
+    acts, live = _head_actions(root)
     mn, mx = f"{dim}_min", f"{dim}_max"
-    stats = {
-        r.file: (r[mn], r[mx])
-        for r in log.filter(F.col("action") == "add").collect()
-        if r.file in live
-    }
     return sorted(
-        f for f, (fmn, fmx) in stats.items() if fmn <= hi and fmx >= lo
+        f
+        for f, a in _winning_adds_of(acts, live).items()
+        if a[mn] <= hi and a[mx] >= lo
     )
 
 
@@ -3170,11 +3000,8 @@ def source_txn_log_optimize_zorder(
     (selectivity^(1/d)); the interleave math is already certified
     row-level by pipeline_zorder_stats, and readers racing the
     rewrite see old or new atomically (last-action-wins replay)."""
-    root, log_dir = _txn_zorder_table(spark, sf_dir)
-    survivors = _zorder_prune(spark, root, log_dir, "hour", 0, 5)
-    scan = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(
-        *[os.path.join(root, name) for name in survivors]
-    )
+    root, _log_dir = _txn_zorder_table(spark, sf_dir)
+    scan = _scan_files(spark, root, _zorder_prune(root, "hour", 0, 5))
     return _fidelity_agg(scan.filter(F.hour("ts") < 6))
 
 
@@ -3566,19 +3393,11 @@ def source_txn_log_timestamp_travel(
     never data; the replay and scan after resolution are identical to
     the VERSION AS OF path (bounded by checkpoints, file list to the
     driver, parallel scan of the historical live set)."""
-    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
-
-    root, log_dir = _txn_ts_table(spark, sf_dir)
-    v = TxnLogWriter(root).version_at_timestamp(2500)  # planning: one
-    # readline per commit file, then the standard bounded replay
-    log = (
-        spark.read.schema("version long, action string, file string")
-        .json(os.path.join(log_dir, "*.json"))
-        .filter(F.col("version") <= v)
-    )
-    paths = [os.path.join(root, name) for name in _replay_live_files(log)]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    root, _log_dir = _txn_ts_table(spark, sf_dir)
+    w = TxnLogWriter(root)
+    v = w.version_at_timestamp(2500)  # planning: one readline per
+    # commit file, then the standard bounded replay
+    return _fidelity_agg(_scan_files(spark, root, w.live_files(as_of=v)))
 
 
 # ---------------------------------------------------------------------------
@@ -3930,13 +3749,10 @@ def source_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: restore is pure control plane — it replays two file LISTS
     (catalog scale) and writes one JSON commit; zero data moves, which
     is why lakehouse restores are instant at 100 TB."""
-    root, log_dir = _txn_restore_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string"
-    ).json(os.path.join(log_dir, "*.json"))
-    paths = [os.path.join(root, n) for n in _replay_live_files(log)]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    root, _log_dir = _txn_restore_table(spark, sf_dir)
+    return _fidelity_agg(
+        _scan_files(spark, root, TxnLogWriter(root).live_files())
+    )
 
 
 def _txn_clone_tables(
@@ -4050,15 +3866,10 @@ def source_txn_log_shallow_clone(
     Scale: cloning a 100 TB table costs one catalog-scale commit;
     divergent writes pay only for what they change — the entire point
     of zero-copy clones for experimentation on production tables."""
-    _src_root, clone_root, log_dir = _txn_clone_tables(spark, sf_dir)
-    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
-
-    clone = TxnLogWriter(clone_root)
-    paths = [
-        os.path.join(clone_root, n) for n in clone.live_files()
-    ]  # identity on the absolute source names
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    _src_root, clone_root, _log_dir = _txn_clone_tables(spark, sf_dir)
+    # os.path.join is the identity on the absolute source names
+    live = TxnLogWriter(clone_root).live_files()
+    return _fidelity_agg(_scan_files(spark, clone_root, live))
 
 
 def _txn_constraints_table(
@@ -4157,13 +3968,10 @@ def source_txn_log_check_constraints(
     Scale: enforcement costs one map-side-combinable aggregate over
     the batch being written (executors), |constraints| counters to the
     driver, zero extra shuffles; the declaration is one JSON line."""
-    root, log_dir = _txn_constraints_table(spark, sf_dir)
-    log = spark.read.schema(
-        "version long, action string, file string"
-    ).json(os.path.join(log_dir, "*.json"))
-    paths = [os.path.join(root, n) for n in _replay_live_files(log)]
-    snapshot = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
-    return _fidelity_agg(snapshot)
+    root, _log_dir = _txn_constraints_table(spark, sf_dir)
+    return _fidelity_agg(
+        _scan_files(spark, root, TxnLogWriter(root).live_files())
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4273,13 +4081,10 @@ def read_txn_log_mapped(
     mapping map to themselves (never renamed)."""
     import json as _json
 
-    from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
-
-    w = TxnLogWriter(root)
-    meta = _json.loads(w._newest_schema())
+    acts, live = _head_actions(root)
+    meta = _json.loads(_newest_action(acts, "metaData")["schema"])
     mapping = meta.get("columnMapping", {})
-    paths = [os.path.join(root, n) for n in w.live_files()]
-    snap = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(*paths)
+    snap = _scan_files(spark, root, live)
     return snap.select(
         *[
             F.col(mapping.get(logical, logical)).alias(logical)
@@ -6101,8 +5906,8 @@ def source_txn_log_multipart_checkpoint(
     (r15): the live-set materialization round-robins across N part
     files and `_last_checkpoint` records {"version", "parts"}, the
     form that keeps any single checkpoint file bounded as the live
-    set grows to millions of entries AND lets the reader load parts
-    as one distributed json read instead of a single-file bottleneck.
+    set grows to millions of entries AND lets a reader load parts in
+    parallel (this engine's driver replay reads them one after another).
     This table's history is fully vacuumed, so the three parts are
     the ONLY source of state — a reader that loads a strict subset of
     parts loses live files (and an in-flight delete carried by a
@@ -6113,8 +5918,8 @@ def source_txn_log_multipart_checkpoint(
 
     At 100 TB: a single-file checkpoint of a 10M-file table is a
     multi-GB JSON a driver must stream alone; parts bound file size
-    and parallelize the load — the same reason Delta shards
-    checkpoint parquet."""
+    and let a reader parallelize the load — the same reason Delta
+    shards checkpoint parquet."""
     root, log_dir = _txn_multipart_table(spark, sf_dir)
     parts = [
         n

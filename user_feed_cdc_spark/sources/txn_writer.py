@@ -23,7 +23,7 @@ Protocol (a faithful miniature of Delta's OptimisticTransaction):
   OPTIMIZE of the same file group, the classic case).
 * Every commit holds the ONE-ACTION-PER-FILE-PER-COMMIT invariant at
   write time (the replay side independently asserts it — see
-  formats._replay_live_files).
+  _last_wins).
 * With `checkpoint_interval=N`, every Nth commit also writes
   `{v:05d}.checkpoint.json` (the live file list as of v, plus the
   newest txn action per streaming app — Delta checkpoints carry
@@ -74,7 +74,7 @@ class ConstraintViolation(Exception):
 
 
 def _last_wins(actions: list[dict]) -> list[str]:
-    """Driver-side twin of formats._replay_live_files over already-
+    """The live-file replay every txn-log reader runs, over already-
     loaded action dicts: last-action-wins per file, remove outranking
     add only across versions; asserts one-action-per-file-per-commit."""
     seen: set[tuple[str, int]] = set()

@@ -664,6 +664,30 @@ def _write_feed_batch(
     )
 
 
+def _read_feed_files(
+    spark: SparkSession, feed_path: str, names: list[str]
+) -> DataFrame:
+    """The named live files of a txn-log feed table as one frame. Each
+    is a directory of (activity_date, user_bucket) partitions, read
+    with the fixed FEED_TABLE_SCHEMA, so no schema-inference job runs.
+    Spark refuses one read over several partitioned roots, hence the
+    union."""
+    import os
+    from functools import reduce
+
+    if not names:
+        raise ValueError(f"txn-log feed table at {feed_path} is empty")
+    return reduce(
+        DataFrame.unionByName,
+        [
+            spark.read.schema(FEED_TABLE_SCHEMA).parquet(
+                os.path.join(feed_path, name)
+            )
+            for name in names
+        ],
+    )
+
+
 def read_feed_txnlog(spark: SparkSession, feed_path: str) -> DataFrame:
     """Snapshot read of a txn-log feed table (the sink_format='txnlog'
     arm of _write_feed_batch): replay the engine-written log for the
@@ -675,19 +699,10 @@ def read_feed_txnlog(spark: SparkSession, feed_path: str) -> DataFrame:
     each per-batch read prunes on (activity_date, user_bucket) like
     the raw layout. At scale, OPTIMIZE through the committer folds
     small batch files together without changing this read."""
-    import os
-    from functools import reduce
-
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
-    writer = TxnLogWriter(feed_path)
-    parts = [
-        spark.read.parquet(os.path.join(feed_path, name))
-        for name in writer.live_files()
-    ]
-    if not parts:
-        raise ValueError(f"txn-log feed table at {feed_path} is empty")
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    live = TxnLogWriter(feed_path).live_files()
+    return _read_feed_files(spark, feed_path, live)
 
 
 def compact_feed_txnlog(spark: SparkSession, feed_path: str) -> str:
@@ -702,7 +717,6 @@ def compact_feed_txnlog(spark: SparkSession, feed_path: str) -> str:
     sets plus the recent tail instead of every batch ever written.
     Returns the committed compacted-file name."""
     import os
-    from functools import reduce
 
     from user_feed_cdc_spark.sources.txn_writer import TxnLogWriter
 
@@ -713,12 +727,7 @@ def compact_feed_txnlog(spark: SparkSession, feed_path: str) -> str:
     # committed in between into the compacted file while leaving it
     # live in the log — every one of its rows would then read twice
     live = writer.live_files()
-    if not live:
-        raise ValueError(f"txn-log feed table at {feed_path} is empty")
-    merged = reduce(
-        lambda a, b: a.unionByName(b),
-        [spark.read.parquet(os.path.join(feed_path, n)) for n in live],
-    )
+    merged = _read_feed_files(spark, feed_path, live)
     name = f"compacted{txn.base_version + 1:05d}"
     (
         merged.write.mode("overwrite")
